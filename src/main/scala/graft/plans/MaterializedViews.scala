@@ -351,7 +351,11 @@ object MaterializedViews {
       count(lit(1)).as("__mv_cnt")
 
   /** Persist `mv`, splice it into the registry, keep the rewrite rule
-    * installed; unpersists the MV generation it replaces. */
+    * installed; unpersists the MV generation it replaces. The tile is
+    * lineage-cut and cached by ONE job (cutAndCache); a fold whose inputs
+    * fit one partition (onePartition) adds no shuffle-stage job before
+    * it, so a small fold costs that job plus any broadcast its delta's
+    * join needs. */
   private def store(spark: SparkSession, name: String, signature: Signature,
       keys: Seq[String], sums: Seq[String], mins: Seq[String],
       maxs: Seq[String], approxes: Seq[String], mv: DataFrame,
@@ -379,10 +383,7 @@ object MaterializedViews {
     // checkpoint RDD in memory too would keep every tile resident TWICE
     // (ADVICE r14); the disk blocks exist only to rebuild evicted cache
     // partitions and to cut lineage
-    val snapped = mv.localCheckpoint(true,
-      org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    snapped.persist()
-    val n = snapped.count() // materialize now; the tile's cost key
+    val (snapped, n) = cutAndCache(mv)
 
     // cache-resolved plan: the whole aggregate collapses to an
     // InMemoryRelation leaf, which is what we splice into queries
@@ -404,6 +405,25 @@ object MaterializedViews {
 
     ensureRule(spark)
     snapped
+  }
+
+  /** Lineage-cut and cache `df` with ONE job: a LAZY local checkpoint
+    * (DISK_ONLY blocks, see store), persisted, then a single pass over
+    * the cache's partitions. That pass computes the checkpoint blocks and
+    * the InMemoryRelation batches together, and the checkpoint completes
+    * when it ends (no partition is left to recompute). The row count
+    * comes from the cache's own statistics (the batches' row
+    * accumulator): a count() aggregate would add its own exchange and
+    * jobs. */
+  private def cutAndCache(df: DataFrame): (DataFrame, Long) = {
+    val snapped = df.localCheckpoint(false,
+      org.apache.spark.storage.StorageLevel.DISK_ONLY)
+    snapped.persist()
+    val cache = snapped.queryExecution.withCachedData.collectFirst {
+      case r: org.apache.spark.sql.execution.columnar.InMemoryRelation => r.cacheBuilder
+    }.getOrElse(throw new IllegalStateException("persisted frame did not resolve to a cache"))
+    cache.cachedColumnBuffers.foreachPartition((_: Iterator[_]) => ())
+    (snapped, cache.rowCountStats.value.longValue)
   }
 
   /** Install the rewrite rule in THIS session's optimizer (idempotent).
@@ -449,21 +469,28 @@ object MaterializedViews {
 
   /** Merge the base generation, any pending stream generations, and an
     * optional fresh delta into ONE generation (a single bounded-by-
-    * |MV|+deltas aggregation), replacing every previous cache entry. */
+    * |MV|+deltas aggregation), replacing every previous cache entry.
+    * Inputs that fit one partition (onePartition) merge there with no
+    * exchange: the union is coalesced to one partition, and the delta's
+    * own partial aggregate (deltaPartials, same gate) is already
+    * single-partitioned, so the whole merge is one stage that store()'s
+    * single job runs. Larger inputs keep the distributed plan, whose two
+    * aggregations each shuffle. */
   private def compactInto(spark: SparkSession, d: MvDef,
       extra: Option[DataFrame], deltaInFiles: Boolean,
       asFold: Boolean = false,
       snapshotEntries: Option[Seq[String]] = None): DataFrame = {
     val mergeCols = mergePartialCols(d)
-    val merged0 = (Seq(d.mvDf) ++ d.gens ++ extra).reduce(_ unionByName _)
-      .groupBy(d.keysSeq.map(col): _*)
-      .agg(mergeCols.head, mergeCols.tail: _*)
+    val inputs = Seq(d.mvDf) ++ d.gens ++ extra
+    val union = inputs.reduce(_ unionByName _)
     // store() checkpoints every generation (lineage-cut, see there), so
     // the merged frame needs no extra snapshot here: the old partials it
     // unions are already LogicalRDD leaves no recache can rebuild, and
     // the durable overwrite below can never invalidate what the new
     // generation reads
-    val merged = merged0
+    val merged = (if (onePartition(spark, inputs)) union.coalesce(1) else union)
+      .groupBy(d.keysSeq.map(col): _*)
+      .agg(mergeCols.head, mergeCols.tail: _*)
     val out = store(spark, d.name, d.signature, d.keysSeq, d.sumsSeq, d.minsSeq,
       d.maxsSeq, d.approxSeq, merged, replacedAll = d.mvDf +: d.gens,
       d.filterConjuncts, d.baseDf,
@@ -509,10 +536,7 @@ object MaterializedViews {
         // generations get the same lineage cut as store(): a cached
         // partial whose plan still reads source files would be rebuilt
         // from the live listing by a later write's recache
-        val gen = deltaAgg.localCheckpoint(true,
-          org.apache.spark.storage.StorageLevel.DISK_ONLY)
-        gen.persist()
-        gen.count() // materialize the generation now
+        val (gen, _) = cutAndCache(deltaAgg)
         val dTarget = gen.queryExecution.withCachedData
         val newTarget = logical.Union(Seq(d.target, dTarget),
           byName = false, allowMissingCol = false)
@@ -578,8 +602,29 @@ object MaterializedViews {
     }
     val cols = partialAggCols(d.sumsSeq, d.minsSeq, d.maxsSeq, d.approxSeq,
       d.sumExprCols, d.cntnsSeq)
-    deltaKept.groupBy(d.keysSeq.map(col): _*).agg(cols.head, cols.tail: _*)
+    // the gate compactInto applies to the same fold: the tile's partials
+    // plus the delta's leaves
+    val kept =
+      if (onePartition(spark, d.mvDf +: d.gens :+ delta)) deltaKept.coalesce(1)
+      else deltaKept
+    kept.groupBy(d.keysSeq.map(col): _*).agg(cols.head, cols.tail: _*)
   }
+
+  /** Does a fold over `inputs` fit in ONE partition? True when the
+    * summed size of the leaves it reads (the tile's cached partials, the
+    * appended rows, any leaf files a star delta joins) is at most
+    * spark.sql.adaptive.advisoryPartitionSizeInBytes. At that size AQE
+    * would coalesce the fold's shuffles into a single partition anyway,
+    * so the exchanges and their shuffle-stage jobs buy nothing. Sizes are
+    * the optimizer's leaf statistics: a built cache reports its bytes, a
+    * file scan its file sizes, and a leaf of unknown size (an RDD without
+    * statistics) reports the default size, which keeps the fold
+    * distributed. */
+  private def onePartition(spark: SparkSession, inputs: Seq[DataFrame]): Boolean =
+    inputs.flatMap(_.queryExecution.optimizedPlan.collectLeaves())
+      .map(_.stats.sizeInBytes).sum <=
+      spark.sessionState.conf.getConf(
+        org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
 
   /** Merge columns folding two generations of partials: every partial is
     * a commutative monoid (SUM/counts by SUM, MIN/MAX by themselves, HLL
@@ -813,11 +858,19 @@ object MaterializedViews {
   /** Execute one deferred fold at its enqueue-time epoch; a bumped epoch
     * (re-register/drop/release since the barrier) skips — the delta no
     * longer applies to what the registry holds. Failures drop the tile,
-    * the barrier's no-stale guarantee. */
+    * the barrier's no-stale guarantee.
+    *
+    * The fold's jobs run under their own job group (foldJobGroup) and a
+    * description naming the tile, cleared when the task ends. The
+    * maintenance thread inherits Spark's local properties from whichever
+    * thread first submitted to it, so without this every later fold would
+    * be charged to that caller's stale group. */
   private def runDeferredFold(spark: SparkSession, name: String, epoch: Long,
       deltaAgg: DataFrame, snapshotEntries: Option[Seq[String]]): Unit = {
     foldTaskHook()
-    maintLock.synchronized {
+    val sc = spark.sparkContext
+    sc.setJobGroup(foldJobGroup(name), s"append fold into MV $name")
+    try maintLock.synchronized {
       try {
         if (epochOf(name) == epoch) Option(registry.get(name)).foreach { d =>
           try compactInto(spark, d, Some(deltaAgg), deltaInFiles = true,
@@ -831,8 +884,11 @@ object MaterializedViews {
         }
       } finally pendingFolds.compute(name,
         (_, v) => if (v == null || v <= 1) null else v - 1): Unit
-    }
+    } finally sc.clearJobGroup()
   }
+
+  /** Job group of the deferred folds into tile `name`. */
+  private[graft] def foldJobGroup(name: String): String = s"graft-mv-fold:$name"
 
   /** The star delta with every OTHER leaf pinned to an explicit file
     * list captured NOW (metadata-only), or None when a leaf has no flat
@@ -841,24 +897,15 @@ object MaterializedViews {
     * (self-join ambiguity — the caller downgrades to DROP). */
   private def starDeltaSnapshot(spark: SparkSession, d: MvDef, path: String,
       rows: DataFrame): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val qualified =
-      p.getFileSystem(spark.sessionState.newHadoopConf()).makeQualified(p).toString
-    def touches(leaf: String): Boolean =
-      leaf == qualified || leaf.startsWith(qualified + "/") ||
-        qualified.startsWith(leaf + "/")
-    val hits = d.signature.leaves.zipWithIndex
-      .collect { case (l, i) if l.exists(touches) => i }
-    require(hits.size == 1,
-      s"append touches ${hits.size} leaves of MV ${d.name}; delta needs exactly one")
+    val hit = appendedLeaf(spark, d, path)
     val others = d.signature.leaves.zipWithIndex.map { case (l, i) =>
-      if (i == hits.head) Some(Seq.empty[(Seq[String], Option[String])])
+      if (i == hit) Some(Seq.empty[(Seq[String], Option[String])])
       else listLeafFiles(spark, l)
     }
     if (others.exists(_.isEmpty)) None
     else {
-      val frames = d.signature.leaves.indices.map { i =>
-        if (i == hits.head) rows
+      val frames = d.signature.leaves.zipWithIndex.map { case (l, i) =>
+        if (i == hit) rows
         else {
           // one pinned frame per (files, basePath) group, unioned by
           // name: a FLAT multi-root leaf is one group; a PARTITIONED
@@ -867,7 +914,7 @@ object MaterializedViews {
           // original joint read resolved them relative to each root
           others(i).get
             .map { case (files, basePath) =>
-              val reader = basePath.foldLeft(spark.read)(
+              val reader = basePath.foldLeft(leafReader(spark, d, l))(
                 (r, bp) => r.option("basePath", bp))
               graft.T.normalizeTimestamps(reader.parquet(files: _*))
             }
@@ -920,30 +967,56 @@ object MaterializedViews {
     * (the caller downgrades to DROP). */
   private def starDelta(spark: SparkSession, d: MvDef, path: String,
       rows: DataFrame): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val qualified =
-      p.getFileSystem(spark.sessionState.newHadoopConf()).makeQualified(p).toString
-    def touches(leaf: String): Boolean =
-      leaf == qualified || leaf.startsWith(qualified + "/") ||
-        qualified.startsWith(leaf + "/")
-    val hits = d.signature.leaves.zipWithIndex
-      .collect { case (l, i) if l.exists(touches) => i }
-    require(hits.size == 1,
-      s"append touches ${hits.size} leaves of MV ${d.name}; delta needs exactly one")
+    val hit = appendedLeaf(spark, d, path)
     val frames = d.signature.leaves.zipWithIndex.map { case (l, i) =>
-      if (i == hits.head) rows
-      else graft.T.normalizeTimestamps(spark.read.parquet(l.toSeq.sorted: _*))
+      if (i == hit) rows
+      else graft.T.normalizeTimestamps(
+        leafReader(spark, d, l).parquet(l.toSeq.sorted: _*))
     }
     joinFrames(frames, d.signature.joinPairs.toSeq)
   }
 
-  private def touchedBy(spark: SparkSession, path: String): Seq[MvDef] = {
+  /** A reader carrying the schema of `d`'s leaf relation over `roots`,
+    * as registered (data columns plus any partition columns). Reading
+    * pinned files or live roots with it infers nothing: a schema-less
+    * parquet read runs a one-task inference job, once per join tile per
+    * append, and could re-type partition columns from a subset of the
+    * paths. A leaf the defining plan does not show reads schema-less. */
+  private def leafReader(spark: SparkSession, d: MvDef, roots: Set[String])
+      : org.apache.spark.sql.DataFrameReader =
+    d.baseDf.queryExecution.analyzed.collectFirst {
+      case lr: LogicalRelation if (lr.relation match {
+        case fs: HadoopFsRelation => fs.location.rootPaths.map(_.toString).toSet == roots
+        case _ => false
+      }) => lr.relation.schema
+    }.foldLeft(spark.read)(_ schema _)
+
+  /** Does a leaf root overlap the written `path`? Either may contain the
+    * other: a partition-scoped write under a table root touches the
+    * leaf, and so does a write to a directory above it. `path` is
+    * qualified the way leaf roots were at registration. */
+  private def touchesPath(spark: SparkSession, path: String): String => Boolean = {
     val p = new org.apache.hadoop.fs.Path(path)
     val qualified =
       p.getFileSystem(spark.sessionState.newHadoopConf()).makeQualified(p).toString
-    def touches(leaf: String): Boolean =
-      leaf == qualified || leaf.startsWith(qualified + "/") ||
-        qualified.startsWith(leaf + "/")
+    leaf => leaf == qualified || leaf.startsWith(qualified + "/") ||
+      qualified.startsWith(leaf + "/")
+  }
+
+  /** Index of the one leaf of `d` an append to `path` lands in; throws
+    * when the path matches zero or several leaves (self-join ambiguity:
+    * the delta would need both sides at once). */
+  private def appendedLeaf(spark: SparkSession, d: MvDef, path: String): Int = {
+    val touches = touchesPath(spark, path)
+    val hits = d.signature.leaves.zipWithIndex
+      .collect { case (l, i) if l.exists(touches) => i }
+    require(hits.size == 1,
+      s"append touches ${hits.size} leaves of MV ${d.name}; delta needs exactly one")
+    hits.head
+  }
+
+  private def touchedBy(spark: SparkSession, path: String): Seq[MvDef] = {
+    val touches = touchesPath(spark, path)
     import scala.jdk.CollectionConverters._
     registry.values.asScala
       .filter(_.signature.leaves.exists(_.exists(touches))).toSeq

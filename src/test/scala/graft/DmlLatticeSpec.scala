@@ -405,6 +405,163 @@ class DmlLatticeSpec extends SparkSpec {
     }
   }
 
+  // ---- append-fold job budget -----------------------------------------
+
+  /** Groups of the jobs the listener bus delivered (barrier jobs aside),
+    * their descriptions, and how many stages wrote shuffle output. */
+  private final class JobLog extends org.apache.spark.scheduler.SparkListener {
+    import org.apache.spark.scheduler._
+    private val Barrier = "joblog:barrier"
+    private val jobs = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
+    private var barrierJob = -1
+    private var drained = false
+    private var shuffled = 0
+    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+      def prop(k: String) = Option(e.properties).map(_.getProperty(k)).orNull
+      val group = prop("spark.jobGroup.id")
+      if (group == Barrier) barrierJob = e.jobId
+      else jobs += ((group, prop("spark.job.description")))
+    }
+    override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
+      if (e.jobId == barrierJob) { drained = true; notifyAll() }
+    }
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit = synchronized {
+      if (e.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten > 0) shuffled += 1
+    }
+    /** Block until the bus has delivered every event up to now: a
+      * barrier job's end arrives after all earlier events. */
+    def drain(sc: org.apache.spark.SparkContext): Unit = {
+      sc.setJobGroup(Barrier, Barrier)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      synchronized {
+        val deadline = System.currentTimeMillis() + 30000
+        while (!drained && System.currentTimeMillis() < deadline) wait(100)
+        assert(drained, "listener bus did not drain")
+      }
+    }
+    def groupsAndDescriptions: Seq[(String, String)] = synchronized(jobs.toSeq)
+    def jobCount: Int = synchronized(jobs.size)
+    def shuffleStages: Int = synchronized(shuffled)
+  }
+
+  /** Run `body` (which must wait for its own deferred folds) with a
+    * listener attached; returns what it saw. */
+  private def logJobs(body: => Unit): JobLog = {
+    val log = new JobLog
+    val sc = spark.sparkContext
+    sc.addSparkListener(log)
+    try { body; log.drain(sc) } finally sc.removeSparkListener(log)
+    log
+  }
+
+  /** A tile's rows, sorted: `registerOnce` with an unchanged definition
+    * hands back the live (folded) tile frame. */
+  private def tileRows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toString).toSeq.sorted
+
+  /** One append into a single-leaf tile and one into a join tile, each
+    * counted by a listener; both folded tiles must equal a registration
+    * made afresh over the same files. Returns (single-leaf jobs, join
+    * jobs, shuffle-writing stages over both appends). */
+  private def foldAndCompare(tag: String): (Int, Int, Int) = {
+    val root = java.nio.file.Files.createTempDirectory("foldjobs").toString
+    val (fact1, fact2, dim) = (s"$root/f1", s"$root/f2", s"$root/d")
+    val facts = Seq((1L, 10, 5.0, "a"), (2L, 20, 7.0, "b"), (3L, 10, 9.0, "c"))
+      .toDF("id", "k", "v", "s")
+    facts.write.parquet(fact1)
+    facts.write.parquet(fact2)
+    Seq((10, "x"), (20, "y"), (30, "z")).toDF("dk", "name").write.parquet(dim)
+    def single = spark.read.parquet(fact1)
+    def star = spark.read.parquet(fact2)
+      .join(spark.read.parquet(dim), col("k") === col("dk"))
+    // registerOnce registers a new name and hands back the live tile of
+    // a registered one
+    def singleTile(name: String) = MaterializedViews.registerOnce(spark, name, single,
+      keys = Seq("k"), sums = Seq("v"), mins = Seq("id"), maxs = Seq("id"), counts = Seq("s"))
+    def starTile(name: String) = MaterializedViews.registerOnce(spark, name, star,
+      keys = Seq("name"), sums = Seq("v"), maxs = Seq("id"))
+    try {
+      singleTile(s"${tag}_s")
+      starTile(s"${tag}_j")
+      val delta = Seq((4L, 20, 11.0, "d"), (5L, 30, 13.0, null: String))
+        .toDF("id", "k", "v", "s")
+      val singleLog = logJobs {
+        TableDml.insertInto(spark, fact1, delta)
+        MaterializedViews.awaitMaintenance()
+      }
+      val joinLog = logJobs {
+        TableDml.insertInto(spark, fact2, delta)
+        MaterializedViews.awaitMaintenance()
+      }
+      assert(MaterializedViews.isRegistered(s"${tag}_s") &&
+        MaterializedViews.isRegistered(s"${tag}_j"), "both folds must land, not drop")
+      val folded = (tileRows(singleTile(s"${tag}_s")), tileRows(starTile(s"${tag}_j")))
+      val fresh = (tileRows(singleTile(s"${tag}_s_fresh")),
+        tileRows(starTile(s"${tag}_j_fresh")))
+      assert(folded == fresh, "a folded tile must equal a fresh registration")
+      assert(folded._1.size == 3 && folded._2.size == 3)
+      (singleLog.jobCount, joinLog.jobCount,
+        singleLog.shuffleStages + joinLog.shuffleStages)
+    } finally MaterializedViews.clear()
+  }
+
+  test("a small append fold runs in one partition: a fixed job budget, exact tiles") {
+    val (singleJobs, joinJobs, shuffles) = foldAndCompare("budget")
+    // single-leaf tile: the append's write plus ONE job that merges,
+    // lineage-cuts and caches the tile. Join tile: the write, the
+    // broadcast of the appended rows, and that same one job.
+    assert(singleJobs <= 2, s"single-leaf append took $singleJobs jobs")
+    assert(joinJobs <= 3, s"join-tile append took $joinJobs jobs")
+    assert(shuffles == 0, s"a one-partition fold must not shuffle ($shuffles stages did)")
+  }
+
+  test("above the advisory partition size the fold stays distributed and exact") {
+    val key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    spark.conf.set(key, "1b")
+    try {
+      val (_, _, shuffles) = foldAndCompare("distributed")
+      assert(shuffles > 0, "inputs above the advisory size must take the shuffled plan")
+    } finally spark.conf.unset(key)
+  }
+
+  test("deferred folds run under their own job group, cleared after each fold") {
+    val fact = java.nio.file.Files.createTempDirectory("foldgrp").toString + "/f"
+    val dim = java.nio.file.Files.createTempDirectory("foldgrp").toString + "/d"
+    Seq((1L, 10, 5.0), (2L, 20, 7.0)).toDF("id", "k", "v").write.parquet(fact)
+    Seq((10, "x"), (20, "y")).toDF("dk", "name").write.parquet(dim)
+    val sc = spark.sparkContext
+    val leftOver = new java.util.concurrent.atomic.AtomicReference[String]("unset")
+    try {
+      MaterializedViews.register(spark, "group_j", spark.read.parquet(fact)
+        .join(spark.read.parquet(dim), col("k") === col("dk")),
+        keys = Seq("name"), sums = Seq("v"))
+      val log = logJobs {
+        sc.setJobGroup("caller-group", "caller")
+        try {
+          TableDml.insertInto(spark, fact, Seq((3L, 10, 1.0)).toDF("id", "k", "v"))
+          MaterializedViews.awaitMaintenance()
+          // the next fold task starts on the same maintenance thread: its
+          // hook sees whatever group the previous fold left behind
+          MaterializedViews.foldTaskHook = () => {
+            MaterializedViews.foldTaskHook = () => ()
+            leftOver.set(sc.getLocalProperty("spark.jobGroup.id"))
+          }
+          TableDml.insertInto(spark, dim, Seq((30, "z")).toDF("dk", "name"))
+          MaterializedViews.awaitMaintenance()
+        } finally sc.clearJobGroup()
+      }
+      val foldJobs = log.groupsAndDescriptions
+        .filter(_._1 == MaterializedViews.foldJobGroup("group_j"))
+      assert(foldJobs.size >= 2, s"fold jobs by group: ${log.groupsAndDescriptions}")
+      assert(foldJobs.forall(_._2.contains("group_j")),
+        s"fold job descriptions must name the tile: $foldJobs")
+      assert(leftOver.get == null, s"a finished fold left job group ${leftOver.get}")
+    } finally {
+      MaterializedViews.foldTaskHook = () => ()
+      MaterializedViews.clear()
+    }
+  }
+
   test("correlated dimensions: the pair-aware profile admits the tile the product rejects") {
     import spark.implicits._
     // quarter is DETERMINED by month: card(month)=24, card(quarter)=8,
